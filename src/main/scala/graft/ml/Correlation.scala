@@ -1,6 +1,6 @@
 package graft.ml
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Exact Spearman rank correlation — "do two scorers RANK the corpus
@@ -39,6 +39,14 @@ object Correlation {
         (col("__cum") * 2 + col("__cnt") + 1).as(outCol))
   }
 
+  /** `a · b` over two BIGINT rank columns as an exact DECIMAL(38,0):
+    * each factor is cast before the multiply, so the product never
+    * passes through a 64-bit LONG (which wraps once a rank passes
+    * ~3·10⁹, i.e. n ≈ 1.5·10⁹ rows).
+    */
+  private[ml] def exactProduct(a: Column, b: Column): Column =
+    a.cast("decimal(38,0)") * b.cast("decimal(38,0)")
+
   /** One row: `(n, spearman)`; null x or y rows are excluded.
     *
     * Sufficient-statistics form (r14): the five rank sums are computed
@@ -62,24 +70,23 @@ object Correlation {
     val d = "decimal(38,0)"
     val rx = midrank2Ranks(rows, "__x", "rx")
     val ry = midrank2Ranks(rows, "__y", "ry")
-    // per-side moments from the distinct-value frames (rank ≤ 2n+1 and
-    // rank² ≤ (2n+1)² fit a long up to n ≈ 1.5·10⁹; the cnt multiply is
-    // decimal). n = Σcnt — the same count the row-level agg produced,
+    // per-side moments from the distinct-value frames, every product in
+    // exact decimal. n = Σcnt — the same count the row-level agg produced,
     // coalesced so an empty input still yields the single (0, null) row.
     val xs = rx.agg(
       coalesce(sum(col("__cnt")), lit(0L)).as("n"),
-      sum(col("rx").cast(d) * col("__cnt").cast(d)).as("sx"),
-      sum((col("rx") * col("rx")).cast(d) * col("__cnt").cast(d)).as("sxx"))
+      sum(exactProduct(col("rx"), col("__cnt"))).as("sx"),
+      sum(exactProduct(col("rx"), col("rx")) * col("__cnt").cast(d)).as("sxx"))
     val ys = ry.agg(
-      sum(col("ry").cast(d) * col("__cnt").cast(d)).as("sy"),
-      sum((col("ry") * col("ry")).cast(d) * col("__cnt").cast(d)).as("syy"))
+      sum(exactProduct(col("ry"), col("__cnt"))).as("sy"),
+      sum(exactProduct(col("ry"), col("ry")) * col("__cnt").cast(d)).as("syy"))
     // cross moment over the joint (x, y) distribution; the rank frames
     // are distinct-value-sized, so these joins never move the corpus
     val xys = rows.groupBy(col("__x"), col("__y"))
       .agg(count(lit(1)).as("__cxy"))
       .join(rx.select(col("__x"), col("rx")), Seq("__x"))
       .join(ry.select(col("__y"), col("ry")), Seq("__y"))
-      .agg(sum((col("rx") * col("ry")).cast(d) * col("__cxy").cast(d))
+      .agg(sum(exactProduct(col("rx"), col("ry")) * col("__cxy").cast(d))
         .as("sxy"))
     val sums = xs.crossJoin(ys).crossJoin(xys)
     val num = (col("n").cast(d) * col("sxy") - col("sx") * col("sy"))
@@ -128,9 +135,9 @@ object Correlation {
     val sums = withRanks.groupBy(g: _*).agg(
       count(lit(1)).as("n"),
       sum(col("rx").cast(d)).as("sx"), sum(col("ry").cast(d)).as("sy"),
-      sum((col("rx") * col("ry")).cast(d)).as("sxy"),
-      sum((col("rx") * col("rx")).cast(d)).as("sxx"),
-      sum((col("ry") * col("ry")).cast(d)).as("syy"))
+      sum(exactProduct(col("rx"), col("ry"))).as("sxy"),
+      sum(exactProduct(col("rx"), col("rx"))).as("sxx"),
+      sum(exactProduct(col("ry"), col("ry"))).as("syy"))
     val num = (col("n").cast(d) * col("sxy") - col("sx") * col("sy"))
       .cast("double")
     val vx = (col("n").cast(d) * col("sxx") - col("sx") * col("sx"))

@@ -878,7 +878,10 @@ object EventsStream {
     * emission is committed as soon as one batch runs with zero input
     * rows, so detect that drained state from the progress stream and
     * stop there; self-terminating queries exit the poll via !isActive
-    * and still surface their failure through awaitTermination.
+    * and still surface their failure through awaitTermination. Having
+    * seen a data batch is sticky across polls: `recentProgress` keeps
+    * only the last 100 batches, and a burst of empty timer batches
+    * between two polls can push the data batch out of it.
     */
   def runToMemory(df: DataFrame, name: String,
                   mode: String = "append"): DataFrame = {
@@ -887,11 +890,12 @@ object EventsStream {
       .start()
     try {
       val deadline = System.nanoTime() + 300L * 1000 * 1000 * 1000
+      var sawData = false
       var drained = false
       while (!drained && q.isActive && System.nanoTime() < deadline) {
         val ps = q.recentProgress
-        drained = ps.exists(_.numInputRows > 0) &&
-          ps.lastOption.exists(_.numInputRows == 0)
+        sawData ||= ps.exists(_.numInputRows > 0)
+        drained = sawData && ps.lastOption.exists(_.numInputRows == 0)
         if (!drained) Thread.sleep(20)
       }
       // propagate a failed query's exception; a timer-driven query that

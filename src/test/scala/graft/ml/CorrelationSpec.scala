@@ -89,4 +89,18 @@ class CorrelationSpec extends AnyFunSuite {
     assert(gc("g0") === None)
     assert(gc("g1").isDefined)
   }
+
+  test("rank products are exact past the 64-bit range") {
+    // ranks of ~4·10⁹ (n ≈ 2·10⁹ rows): their product passes
+    // Long.MaxValue ≈ 9.2·10¹⁸, where a LONG multiply wraps
+    val a = 4000000001L
+    val b = 3999999999L
+    val got = spark.range(1)
+      .select(Correlation.exactProduct(lit(a), lit(b)).as("p"),
+        Correlation.exactProduct(lit(a), lit(a)).as("sq"))
+      .head()
+    assert(BigDecimal(got.getDecimal(0)) === BigDecimal(a) * BigDecimal(b))
+    assert(BigDecimal(got.getDecimal(1)) === BigDecimal(a) * BigDecimal(a))
+    assert(BigDecimal(a) * BigDecimal(b) > BigDecimal(Long.MaxValue))
+  }
 }

@@ -1,6 +1,11 @@
 package graft.ml
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.ml.feature.VectorAssembler
+import org.apache.spark.ml.linalg.Vector
+import org.apache.spark.ml.regression.{GBTRegressionModel, GBTRegressor}
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.TestSpark
 
@@ -173,5 +178,131 @@ class MlSpec extends AnyFunSuite {
     assert(cv.count() === trained.cv.foldR2.size)
     val stored = cv.orderBy("fold").collect().map(_.getDouble(1)).toSeq
     assert(stored === trained.cv.foldR2)
+  }
+
+  /** The one-fit-at-a-time form of [[ImputationModel.train]]: folds
+    * fitted in order over a `VectorAssembler(handleInvalid = "keep")`
+    * applied per fit, each fold probed for emptiness on its own.
+    */
+  private def sequentialTrain(train: DataFrame, test: DataFrame,
+                              features: Seq[String], target: String,
+                              groupCol: String, k: Int,
+                              hp: ImputationModel.Hyperparams,
+                              stratifyCol: Option[String])
+      : (Seq[Double], Double, GBTRegressionModel) = {
+    val asm = new VectorAssembler().setInputCols(features.toArray)
+      .setOutputCol("__features").setHandleInvalid("keep")
+    val est = new GBTRegressor().setLabelCol(target)
+      .setFeaturesCol("__features").setPredictionCol("__prediction")
+      .setMaxDepth(hp.maxDepth).setMaxIter(hp.maxIter)
+      .setStepSize(hp.stepSize).setSubsamplingRate(hp.subsamplingRate)
+      .setMinInstancesPerNode(hp.minInstancesPerNode).setSeed(hp.seed)
+    val folded = (stratifyCol match {
+      case Some(s) => StratifiedGroupKFold.withStratifiedFold(train, groupCol, s, k)
+      case None    => ImputationModel.withFold(train, groupCol, k)
+    }).cache()
+    try {
+      val scores = (0 until k).flatMap { f =>
+        val tr = folded.filter(col("__fold") =!= f)
+        val va = folded.filter(col("__fold") === f)
+        if (va.isEmpty || tr.isEmpty) None
+        else Some(ImputationModel.r2(
+          est.fit(asm.transform(tr)).transform(asm.transform(va)), target))
+      }
+      val model = est.fit(asm.transform(folded))
+      (scores, ImputationModel.r2(model.transform(asm.transform(test)), target), model)
+    } finally folded.unpersist()
+  }
+
+  /** synth plus an int and a float feature (a fit rejects NaN features,
+    * so nulls and NaNs are the assembly spec's). */
+  private def synthMixed(n: Int) = synth(n)
+    .withColumn("xi", (col("id") % 13).cast("int"))
+    .withColumn("xf", (col("x1") - col("x2")).cast("float"))
+    .withColumn("k_region", concat(lit("r"), (col("group50km") % 3).cast("string")))
+
+  private def bits(xs: Seq[Double]) = xs.map(java.lang.Double.doubleToLongBits)
+
+  private def treesOf(m: GBTRegressionModel) =
+    m.toDebugString.linesIterator.drop(1).toList // line 1 carries the uid
+
+  test("concurrent train is bit-identical to the sequential assembler path") {
+    val df = synthMixed(900)
+    val tr = df.filter(col("id") % 5 =!= 0)
+    val te = df.filter(col("id") % 5 === 0)
+    val features = Seq("x1", "x2", "xi", "xf")
+    val hp = ImputationModel.Hyperparams(maxIter = 5, maxDepth = 4)
+    for (strat <- Seq(None, Some("k_region"))) {
+      val got = ImputationModel.train(tr, te, features, "y", "group50km",
+        k = 4, hp, stratifyCol = strat)
+      val (folds, testR2, model) =
+        sequentialTrain(tr, te, features, "y", "group50km", 4, hp, strat)
+      assert(folds.size === 4, s"$strat")
+      assert(bits(got.cv.foldR2) === bits(folds), s"$strat fold R² (in fold order)")
+      assert(bits(Seq(got.testR2)) === bits(Seq(testR2)), s"$strat test R²")
+      assert(treesOf(got.model) === treesOf(model), s"$strat trees")
+    }
+  }
+
+  test("uid-free assembly equals VectorAssembler keep; predict reuses its code") {
+    val df = Seq[(Long, Option[Int], Option[Double], Option[Float], Long)](
+      (1L, Some(3), Some(1.5), Some(2.5f), 7L),
+      (2L, None, Some(Double.NaN), None, 0L),
+      (3L, Some(-4), None, Some(Float.NaN), -2L),
+      (4L, Some(0), Some(-0.0), Some(1e-3f), Long.MaxValue),
+      (5L, None, None, None, 1L)
+    ).toDF("id", "i", "d", "f", "l")
+    val features = Seq("i", "d", "f", "l")
+    def vectors(out: DataFrame) = out.orderBy("id").select("__features")
+      .collect().map(_.getAs[Vector](0).toArray.toSeq).toSeq
+    val ours = vectors(ImputationModel.assembled(df, features))
+    val ref = vectors(new VectorAssembler().setInputCols(features.toArray)
+      .setOutputCol("__features").setHandleInvalid("keep").transform(df))
+    assert(ours.map(bits) === ref.map(bits))
+
+    // repartitioned, so the optimizer cannot fold the projections into a
+    // local relation and the plan goes through generated code; the int
+    // and float features are the ones VectorAssembler renames with its uid
+    val data = synthMixed(400).repartition(2)
+    val trained = ImputationModel.train(data, data, Seq("x1", "xi", "xf"), "y",
+      "group50km", k = 2, ImputationModel.Hyperparams(maxIter = 3))
+    ImputationModel.predict(data, trained, "p").collect()
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    ImputationModel.predict(data, trained, "p").collect()
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles === 0L)
+  }
+
+  test("train edge cases: empty folds skipped, no usable fold, failing fit") {
+    // 3 groups over 10 folds: the empty folds are skipped, as are none
+    // of the populated ones
+    val few = synth(600).withColumn("group50km", col("group50km") % 3)
+    val populated = ImputationModel.withFold(few, "group50km", 10)
+      .select(countDistinct("__fold")).as[Long].head()
+    assume(populated >= 2L)
+    val trained = ImputationModel.train(few, few, Seq("x1", "x2"), "y",
+      "group50km", k = 10, ImputationModel.Hyperparams(maxIter = 3))
+    assert(trained.cv.foldR2.size.toLong === populated)
+
+    // one group: no usable fold, and the check runs before any fit — the
+    // string label would fail the first fit with a different message
+    val stringLabel = synth(200).withColumn("y", col("y").cast("string"))
+    val noFold = intercept[IllegalArgumentException] {
+      ImputationModel.train(stringLabel.withColumn("group50km", lit(1L)),
+        stringLabel, Seq("x1", "x2"), "y", "group50km", k = 4)
+    }
+    assert(noFold.getMessage.contains("no usable CV fold"), noFold.getMessage)
+
+    // a fit that throws: train rethrows its exception, leaves no fit
+    // thread alive and releases the fold cache
+    def fitThreads = Thread.getAllStackTraces.keySet.toArray
+      .map(_.asInstanceOf[Thread]).filter(_.getName.startsWith("imputation-fit-"))
+    val persisted = spark.sparkContext.getPersistentRDDs.size
+    val fitError = intercept[IllegalArgumentException] {
+      ImputationModel.train(stringLabel, stringLabel, Seq("x1", "x2"), "y",
+        "group50km", k = 4)
+    }
+    assert(fitError.getMessage.contains("numeric"), fitError.getMessage)
+    assert(fitThreads.isEmpty, fitThreads.map(_.getName).toSeq)
+    assert(spark.sparkContext.getPersistentRDDs.size === persisted)
   }
 }
